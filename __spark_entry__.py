@@ -158,18 +158,23 @@ def q_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _dedup_by_orig_id(
+    spark: SparkSession, sf_dir: str, cfg: DedupConfig, substring_pass: bool = False
+) -> DataFrame:
+    """``dedup_pipeline`` over the documents table (url = original doc_id),
+    returned as (orig_doc_id, cluster_rep): each cluster labelled by its
+    min ORIGINAL doc_id.
+
+    Internal ids are content-addressed (xxhash64(url)); relabelling makes
+    the output a pure function of the deterministic sketch math — which
+    makes the full pipeline (shingle -> splitmix64 -> 128 permutations ->
+    banding -> bucket pairs -> verify -> connected components) exactly
+    reproducible by the DuckDB oracle. Same partition, canonical labels.
+    """
     docs = _spread(_docs(spark, sf_dir)).select(
         F.col("doc_id").cast("string").alias("url"), "text"
     )
-    cfg = DedupConfig(threshold=0.5)
-    clusters = dedup_pipeline(docs, cfg)["clusters"]
-    # Internal ids are content-addressed (xxhash64(url)); relabel each
-    # cluster by its min ORIGINAL doc_id so the output is a pure function of
-    # the deterministic sketch math — which makes the full pipeline
-    # (shingle -> splitmix64 -> 128 permutations -> 25x5 banding -> bucket
-    # pairs -> est-Jaccard verify -> connected components) exactly
-    # reproducible by the DuckDB oracle. Same partition, canonical labels.
+    clusters = dedup_pipeline(docs, cfg, substring_pass=substring_pass)["clusters"]
     out = clusters.select(
         F.col("url").cast("bigint").alias("orig_doc_id"), "cluster_id"
     )
@@ -179,6 +184,10 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "orig_doc_id", F.min("orig_doc_id").over(w).alias("cluster_rep")
     )
+
+
+def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _dedup_by_orig_id(spark, sf_dir, DedupConfig(threshold=0.5))
 
 
 def q_dedup_with_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -186,20 +195,8 @@ def q_dedup_with_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact-substring edges (>= 29-byte match at this k/w) -> connected
     # components -> cluster labels. Both edge sets are individually
     # oracle-proven; the DuckDB twin unions them before the recursive CC.
-    docs = _spread(_docs(spark, sf_dir)).select(
-        F.col("doc_id").cast("string").alias("url"), "text"
-    )
     cfg = DedupConfig(threshold=0.5, substring_k=20, substring_window=10)
-    clusters = dedup_pipeline(docs, cfg, substring_pass=True)["clusters"]
-    out = clusters.select(
-        F.col("url").cast("bigint").alias("orig_doc_id"), "cluster_id"
-    )
-    # Window min instead of groupBy + broadcast join: one exchange, one
-    # pass over the clusters table (the join shape scanned it twice).
-    w = Window.partitionBy("cluster_id")
-    return out.select(
-        "orig_doc_id", F.min("orig_doc_id").over(w).alias("cluster_rep")
-    )
+    return _dedup_by_orig_id(spark, sf_dir, cfg, substring_pass=True)
 
 
 def q_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -6,14 +6,20 @@ pages(url, warc_ts, html, text, lang)
   -> bands(doc_id, band_idx, band_hash)         native posexplode
   -> cand_pairs(a, b)                           bucket groupBy + pair expansion
   -> verified(a, b, est_jaccard)                zip_with filter at threshold
-  -> clusters(doc_id, cluster_id)               large-star/small-star CC
+  [-> substring_edges(a, b, match_len)]         optional exact long-match pass
+  -> clusters(doc_id, cluster_id)               driver union-find or
+                                                large-star/small-star CC
 
-Every stage can checkpoint through a CheckpointManager (parquet sandbox /
-Iceberg cluster) for mid-run resume. No per-row Python anywhere; the
-signature UDF is the only Arrow boundary.
+Each named stage passes once through ``CheckpointManager.materialize``:
+in memory by default, or written to a parquet/Iceberg table for mid-run
+resume. The pipeline derives the resume digest from the whole config and
+the input files, so a changed run never serves stale stages. No per-row
+Python anywhere; the signature UDF is the only Arrow boundary.
 """
 
 from __future__ import annotations
+
+import dataclasses
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -28,7 +34,7 @@ from datasketch_spark.operators.verify import (
     verify_pairs_est,
     verify_pairs_exact_text,
 )
-from datasketch_spark.sources.io import CheckpointManager, NoopCheckpoints
+from datasketch_spark.sources.io import CheckpointManager
 
 
 def assign_doc_ids(pages: DataFrame, key_col: str = "url") -> DataFrame:
@@ -37,9 +43,10 @@ def assign_doc_ids(pages: DataFrame, key_col: str = "url") -> DataFrame:
     Content-addressed ids (not row_number) keep ids stable across cluster
     sizes and partial re-runs — required for the cross-parallelism
     stability invariant. Collision probability at 10^12 docs over 64 bits
-    is ~3%-birthday-level for the whole corpus but vanishing per pair; for
-    strictness, a collision check (groupBy id, count>1) is part of the
-    metrics stage.
+    is ~3%-birthday-level for the whole corpus but vanishing per pair. No
+    collision check runs here: two keys hashing to one id silently share
+    a doc_id (and so a cluster). Check with ``groupBy("doc_id")`` /
+    ``count() > 1`` when that matters; it costs one more Spark job.
     """
     return pages.withColumn("doc_id", F.xxhash64(F.col(key_col)))
 
@@ -64,29 +71,38 @@ def dedup_pipeline(
     >= k + w - 1 bytes cluster together even when their overall shingle
     Jaccard is below threshold (the north rule's 'exact long-match dedup'
     merged ahead of clustering).
+
+    ``checkpoints`` defaults to the in-memory ``CheckpointManager()``. Its
+    ``run_config`` is extended with everything that decides the output —
+    the full ``cfg``, ``substring_pass``, the key/text columns and the
+    input files — so a resume after any of them changed recomputes.
+    Callers add to ``run_config`` only what those miss, e.g. the size of a
+    generated (non-file) input.
     """
     cfg = cfg or DedupConfig()
-    ckpt = checkpoints or NoopCheckpoints()
+    ckpt = checkpoints or CheckpointManager()
+    ckpt.run_config = {
+        **ckpt.run_config,
+        **dataclasses.asdict(cfg),
+        "substring_pass": substring_pass,
+        "key_col": key_col,
+        "text_col": text_col,
+        "input_files": sorted(pages.inputFiles()),
+    }
 
     docs = assign_doc_ids(pages, key_col).select(
         "doc_id", F.col(key_col).alias("url"), F.col(text_col).alias("text")
     )
 
-    # Signatures are the only stage worth materializing mid-pipeline: they
-    # are consumed twice (banding + verification) and are the expensive UDF
-    # output. bands/cand_pairs are cheap projections that flow straight
-    # into the next shuffle — materializing them would only add I/O. With a
-    # persistent CheckpointManager they are still written for resume.
+    # Signatures are consumed twice (banding + verification) and are the
+    # expensive UDF output. Bands are consumed twice too (the hot-bucket
+    # count and the pair expansion in candidate_pairs, plus the lazy
+    # dropped-bucket audit). The verify stage joins pairs against the
+    # (much larger) signatures table twice, and exact pair-count stats let
+    # AQE pick the broadcast side without runtime re-planning.
     sigs = lsh.with_signature(docs, cfg, text_col="text")
     sigs = ckpt.materialize(sigs.select("doc_id", "sig"), "signatures")
-
-    bands = lsh.bands_table(sigs, cfg)
-    if ckpt.enabled:
-        bands = ckpt.materialize(bands, "bands")
-
-    # Pairs are always materialized: the verify stage joins them against
-    # the (much larger) signatures table twice, and exact pair-count stats
-    # let AQE pick the broadcast side without runtime re-planning.
+    bands = ckpt.materialize(lsh.bands_table(sigs, cfg), "bands")
     pairs = ckpt.materialize(lsh.candidate_pairs(bands, cfg), "cand_pairs")
 
     if cfg.verify_mode == "exact":
@@ -102,14 +118,15 @@ def dedup_pipeline(
     if substring_pass:
         from datasketch_spark.operators.suffix import substring_dedup_edges
 
-        substring_edges = substring_dedup_edges(
-            docs,
-            k=cfg.substring_k,
-            w=cfg.substring_window,
-            bucket_cap=cfg.bucket_cap,
+        substring_edges = ckpt.materialize(
+            substring_dedup_edges(
+                docs,
+                k=cfg.substring_k,
+                w=cfg.substring_window,
+                bucket_cap=cfg.bucket_cap,
+            ),
+            "substring_edges",
         )
-        if ckpt.enabled:
-            substring_edges = ckpt.materialize(substring_edges, "substring_edges")
         edges = edges.unionByName(
             substring_edges.select(
                 F.col("a").alias("u"), F.col("b").alias("v")

@@ -4,8 +4,9 @@ The reference documents this as a caller-side post-filter
 (``lsh.py:376-378,406-409``; implemented in its benchmark harness
 ``benchmark/indexes/jaccard/lsh.py:58-68``) but has no operator for it.
 Ours: join candidate pairs back to the signatures table twice and filter on
-estimated Jaccard (native zip_with expression), or to shingle-set arrays
-for exact Jaccard. Both stay JVM-side.
+estimated Jaccard (native zip_with expression, JVM-side), or to the
+candidate docs' texts and re-shingle them for exact Jaccard (one
+Arrow-batched mapInPandas).
 """
 
 from __future__ import annotations
@@ -48,17 +49,6 @@ def verify_pairs_est(
         .select("a", "b", "est_jaccard")
     )
     return out
-
-
-def exact_jaccard_col(tok1, tok2):
-    """Exact Jaccard of two token-array columns (distinct semantics)."""
-    t1 = F.col(tok1) if isinstance(tok1, str) else tok1
-    t2 = F.col(tok2) if isinstance(tok2, str) else tok2
-    inter = F.size(F.array_intersect(t1, t2))
-    union = F.size(F.array_union(t1, t2))
-    return F.when(union == 0, F.lit(1.0)).otherwise(
-        inter.cast("double") / union.cast("double")
-    )
 
 
 def verify_pairs_exact_text(
@@ -139,27 +129,3 @@ def verify_pairs_exact_text(
             yield pd.DataFrame(rows, columns=["a", "b", "jaccard"])
 
     return joined.mapInPandas(_verify, schema=out_schema)
-
-
-def verify_pairs_exact(
-    pairs: DataFrame,
-    tokens_df: DataFrame,
-    threshold: float,
-    key_col: str = "doc_id",
-    tokens_col: str = "tokens",
-) -> DataFrame:
-    """(a, b) -> (a, b, jaccard) with EXACT set Jaccard over a token-array
-    column, filtered at ``threshold``. Used by the recall oracle tests and
-    the ``verify_mode='exact'`` pipeline path."""
-    toks = tokens_df.select(
-        F.col(key_col).alias("_k"), F.array_distinct(F.col(tokens_col)).alias("_t")
-    )
-    return (
-        pairs.join(toks.withColumnRenamed("_t", "_ta"), pairs["a"] == toks["_k"])
-        .drop("_k")
-        .join(toks.withColumnRenamed("_t", "_tb"), F.col("b") == F.col("_k"))
-        .drop("_k")
-        .withColumn("jaccard", exact_jaccard_col("_ta", "_tb"))
-        .where(F.col("jaccard") >= F.lit(threshold))
-        .select("a", "b", "jaccard")
-    )

@@ -15,9 +15,12 @@ Sandbox smoke:
     python jobs/dedup_job.py --synthetic 10000 --output /tmp/dedup_run
 
 The job checkpoints every stage under --output with a _metrics.json
-sidecar per stage (rows, per-file lineage, elapsed) and is resumable with
---resume: completed stages are read back, computation continues from the
-first missing stage.
+sidecar per stage (rows, per-file lineage, elapsed, config digest) and is
+resumable with --resume: completed stages are read back, computation
+continues from the first missing stage. The digest covers the whole
+pipeline config, --substring-pass and the input files (or the --synthetic
+size), so a resume after changing any of them recomputes instead of
+serving stale stages; run_summary.json records that config.
 """
 
 from __future__ import annotations
@@ -47,7 +50,8 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--shingle-k", type=int, default=5)
     p.add_argument("--bucket-cap", type=int, default=2000)
     p.add_argument("--hash-mode", default="fast", choices=["fast", "parity"])
-    p.add_argument("--resume", action="store_true")
+    p.add_argument("--resume", action="store_true",
+                   help="read back stages checkpointed under the same config and input")
     p.add_argument("--substring-pass", action="store_true",
                    help="also run the exact long-substring pass and merge its edges")
     p.add_argument("--master", default=None)
@@ -72,23 +76,13 @@ def main(argv: list[str] | None = None) -> None:
     else:
         p.error("one of --input / --synthetic is required")
 
+    # dedup_pipeline adds the config and the input files to run_config; a
+    # generated input has no files, so its size stands for it.
     ckpt = CheckpointManager(
         root=args.output,
         format=args.format,
         resume=args.resume,
-        run_config={
-            "threshold": cfg.threshold,
-            "num_perm": cfg.num_perm,
-            "b": cfg.b,
-            "r": cfg.r,
-            "shingle_k": cfg.shingle_k,
-            "hash_mode": cfg.hash_mode,
-            # In the digest: toggling the pass must invalidate resumable
-            # stages (clusters differ with/without substring edges).
-            "substring_pass": bool(args.substring_pass),
-            "substring_k": cfg.substring_k,
-            "substring_window": cfg.substring_window,
-        },
+        run_config={"synthetic": args.synthetic} if args.synthetic else {},
     )
     stages = dedup_pipeline(
         pages, cfg, checkpoints=ckpt, substring_pass=args.substring_pass

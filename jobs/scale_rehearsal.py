@@ -91,11 +91,7 @@ def main() -> None:
         print(f"# corpus generated in {time.time() - t0:.1f}s", file=sys.stderr)
     pages = spark.read.parquet(pages_dir)
 
-    ckpt = CheckpointManager(
-        root=os.path.join(root, "ckpt"),
-        resume=False,
-        run_config={"n_docs": n_docs, "threshold": cfg.threshold, "round": 5},
-    )
+    ckpt = CheckpointManager(root=os.path.join(root, "ckpt"), resume=False)
     t0 = time.time()
     stages = dedup_pipeline(pages, cfg, checkpoints=ckpt)
     out_dir = os.path.join(root, "clusters")

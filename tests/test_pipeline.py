@@ -119,6 +119,64 @@ def test_checkpoint_resume(spark, tmp_path):
     assert first == second
 
 
+def test_resume_recomputes_when_config_or_input_changes(spark, tmp_path):
+    # Resume must key on everything that decides the output. Each changed
+    # knob (or a rewritten input table) must re-stamp every stage sidecar
+    # with a new digest and give the clusters of a fresh in-memory run; an
+    # unchanged re-run must still read every stage back.
+    import dataclasses
+    import glob
+    import json
+    import os
+
+    root = str(tmp_path / "run")
+    src = str(tmp_path / "pages")
+    synth_pages(spark, 120, seed=42).write.parquet(src)
+
+    def sidecars():
+        out = {}
+        for path in glob.glob(os.path.join(root, "*._metrics.json")):
+            with open(path) as fh:
+                out[os.path.basename(path).split(".")[0]] = json.load(fh)
+        return out
+
+    def clusters(df):
+        return {r["url"]: r["cluster_id"] for r in df.collect()}
+
+    def run(cfg, substring_pass=False):
+        pages = spark.read.parquet(src)
+        ckpt = CheckpointManager(root=root, resume=True)
+        got = dedup_pipeline(pages, cfg, checkpoints=ckpt, substring_pass=substring_pass)
+        fresh = dedup_pipeline(pages, cfg, substring_pass=substring_pass)
+        assert clusters(got["clusters"]) == clusters(fresh["clusters"])
+        stages = ["signatures", "bands", "cand_pairs", "verified", "clusters"]
+        stages += ["substring_edges"] if substring_pass else []
+        recorded = sidecars()
+        assert {recorded[s]["config_digest"] for s in stages} == {ckpt.config_digest()}
+        return ckpt.config_digest()
+
+    seen = {run(CFG)}
+    before = sidecars()
+    assert run(CFG) in seen
+    # Resumed, not rewritten: every sidecar is byte-for-byte the same.
+    assert sidecars() == before
+
+    for cfg, substring_pass in [
+        (dataclasses.replace(CFG, bucket_cap=1), False),
+        (dataclasses.replace(CFG, verify_mode="exact"), False),
+        (dataclasses.replace(CFG, seed=7), False),
+        (CFG, True),
+    ]:
+        digest = run(cfg, substring_pass)
+        assert digest not in seen, (cfg, substring_pass)
+        seen.add(digest)
+
+    # Rewritten input table: drop every planted near-dup's second copy.
+    kept = spark.read.parquet(src).where(~F.col("url").endswith("1")).toPandas()
+    spark.createDataFrame(kept).write.mode("overwrite").parquet(src)
+    assert run(CFG) not in seen
+
+
 def test_keep_canonical_and_summary(pipeline):
     n_docs = pipeline["clusters"].count()
     canon = keep_canonical(pipeline["clusters"])
